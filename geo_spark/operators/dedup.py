@@ -30,6 +30,8 @@ the DuckDB oracle.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -67,22 +69,19 @@ def _input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-_SHUFFLE_NODE_RE = None
+# a plan node line: any run of indentation and tree characters (" ", ":",
+# "+", "-", "|") — a left-subtree child prints as ":  +- Aggregate ..."
+_SHUFFLE_NODE_RE = re.compile(
+    r"^[\s+:|-]*'?(Join|Aggregate|Window|Sort|Repartition|"
+    r"RepartitionByExpression|Rebalance|Deduplicate|Distinct|Intersect|Except)\b",
+    re.M,
+)
 
 
 def _plan_has_shuffle(df: DataFrame) -> bool:
     """True when the optimized logical plan contains an exchange-inducing
     operator (join/aggregate/window/sort/repartition/distinct). Driver-side
     string probe only — never runs a job. Conservative on failure."""
-    global _SHUFFLE_NODE_RE
-    import re
-
-    if _SHUFFLE_NODE_RE is None:
-        _SHUFFLE_NODE_RE = re.compile(
-            r"^\s*[+:-]*\s*'?(Join|Aggregate|Window|Sort|Repartition|"
-            r"RepartitionByExpression|Rebalance|Deduplicate|Distinct|Intersect|Except)\b",
-            re.M,
-        )
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:

@@ -3,7 +3,7 @@
 Architecture (SURVEY.md §3.1 "Spark shape"):
 
 1. **coarse**: polygons are expanded into covering Z-order cells with an
-   exact full/partial classification (index.cells.cover_polygon — the
+   exact full/partial classification (index.cells.cover_polygons — the
    distributed stand-in for the reference's IntervalTreeMultiPolygon,
    ``indexed/interval_tree_multipolygon.rs:91-202``); points get a cell id
    via pure-SQL bit math (functions.cell_encode_col). The candidate join is
@@ -19,7 +19,7 @@ Architecture (SURVEY.md §3.1 "Spark shape"):
 4. **exact refine**: only partial-cell candidates enter a vectorized pandas
    UDF running the robust winding-number kernel
    (kernels.predicates.polygon_position) against a broadcast polygon dict,
-   deserialized once per executor (module-level memo).
+   deserialized once per executor.
 
 Scale notes: the point side is never shuffled (broadcast join + AQE);
 polygon-side explosion is bounded by ``max_cells_per_polygon``; hot cells
@@ -36,92 +36,62 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geo_spark.functions import bbox_contains_point, cell_encode_col
-from geo_spark.index.cells import cover_polygon, cover_polygons, pick_cover_res
+from geo_spark.index.cells import cover_polygons
 
-# executor-side cache: broadcast id → {polygon_id: (ext, holes)}
-_BC_CACHE: dict = {}
+_BBOX_COLS = ("xmin", "ymin", "xmax", "ymax")
+_POLYGON_COLS = ("polygon_id", "exterior", "interiors", *_BBOX_COLS)
+_COVER_SCHEMA = (
+    "cell long, polygon_id long, full boolean, "
+    "xmin double, ymin double, xmax double, ymax double"
+)
 
 
-def _driver_cover_rows(poly_rows, res: int):
-    """Cover rows from already-collected polygon rows — the small-side fast
-    path (admin-boundary scale): the geometry is on the driver anyway for
-    the broadcast refine, and a few hundred covers cost less than a Spark
-    job round-trip. The cover itself is the batched vectorized build
-    (``cover_polygons``) — the per-polygon loop version cost ~0.4 ms/polygon
-    of serial driver time, which dominated every admin-scale PIP query."""
-    polys = []
-    for r in poly_rows:
-        ext = np.asarray([(c["x"], c["y"]) for c in r["exterior"]], dtype=np.float64)
-        holes = [
-            np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-            for ring in (r["interiors"] or [])
-        ]
-        polys.append((ext, holes))
-    cells, pidx, fulls = cover_polygons(polys, res)
-    rows = []
-    for c, i, f in zip(cells.tolist(), pidx.tolist(), fulls.tolist()):
-        r = poly_rows[i]
-        rows.append(
-            (
-                int(c),
-                int(r["polygon_id"]),
-                bool(f),
-                float(r["xmin"]),
-                float(r["ymin"]),
-                float(r["xmax"]),
-                float(r["ymax"]),
-            )
-        )
-    return rows
+def _ring_array(ring) -> np.ndarray:
+    """array<struct<x,y>> ring → (n, 2) float64 vertex array."""
+    return np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
+
+
+def _polygon_arrays(r):
+    """One polygon row → (exterior, [holes]) as vertex arrays."""
+    holes = r["interiors"]
+    return _ring_array(r["exterior"]), [
+        _ring_array(h) for h in (holes if holes is not None else [])
+    ]
+
+
+def _cover_frame(rows, res: int) -> pd.DataFrame:
+    """Polygon rows → the compact (cell, polygon_id, full, bbox) cover rows.
+
+    ``rows`` are Spark Rows, plain dicts or Arrow record dicts — anything
+    subscriptable by column name. The whole batch is one ``cover_polygons``
+    call: a per-polygon ``cover_polygon`` loop costs ~0.4 ms/polygon of
+    numpy dispatch.
+    """
+    cells, pidx, full = cover_polygons([_polygon_arrays(r) for r in rows], res)
+    ids = np.asarray([r["polygon_id"] for r in rows], dtype=np.int64)
+    bbox = np.asarray([[r[k] for k in _BBOX_COLS] for r in rows], dtype=np.float64)
+    bbox = bbox.reshape(-1, 4)[pidx]
+    return pd.DataFrame(
+        {"cell": cells, "polygon_id": ids[pidx], "full": full, **dict(zip(_BBOX_COLS, bbox.T))}
+    )
 
 
 def _distributed_cover_rows(polygons: DataFrame, res: int):
     """Compute polygon cell covers on the executors, collect only the compact
     (cell, polygon_id, full, xmin, ymin, xmax, ymax) rows.
 
-    The per-polygon cover construction (cell walk + exact full/partial
-    classification) is the CPU-heavy prep step; at ~1M admin polygons a
-    driver loop serializes minutes of work, so it runs as ``mapInPandas``
-    over however many partitions the polygon table has. The collected rows
-    are compact (no geometry), sized like the broadcast relation itself.
+    The cover construction (cell walk + exact full/partial classification)
+    is the CPU-heavy prep step; at ~1M admin polygons a driver build
+    serializes minutes of work, so it runs as ``mapInPandas`` over however
+    many partitions the polygon table has. The collected rows are compact
+    (no geometry), sized like the broadcast relation itself.
     """
 
     def fn(it):
         for pdf in it:
-            cells_o, pids_o, fulls_o, bbs = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                ext = np.asarray([(c["x"], c["y"]) for c in r.exterior], dtype=np.float64)
-                holes = [
-                    np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-                    for ring in (r.interiors if r.interiors is not None else [])
-                ]
-                cells, full = cover_polygon(ext, holes, res=res)
-                cells_o.append(cells.astype(np.int64))
-                fulls_o.append(full.astype(bool))
-                pids_o.append(np.full(len(cells), int(r.polygon_id), dtype=np.int64))
-                bbs.append((float(r.xmin), float(r.ymin), float(r.xmax), float(r.ymax), len(cells)))
-            if not cells_o:
-                continue
-            reps = [b[4] for b in bbs]
-            yield pd.DataFrame(
-                {
-                    "cell": np.concatenate(cells_o),
-                    "polygon_id": np.concatenate(pids_o),
-                    "full": np.concatenate(fulls_o),
-                    "xmin": np.repeat([b[0] for b in bbs], reps),
-                    "ymin": np.repeat([b[1] for b in bbs], reps),
-                    "xmax": np.repeat([b[2] for b in bbs], reps),
-                    "ymax": np.repeat([b[3] for b in bbs], reps),
-                }
-            )
+            yield _cover_frame(pdf.to_dict("records"), res)
 
-    schema = (
-        "cell long, polygon_id long, full boolean, "
-        "xmin double, ymin double, xmax double, ymax double"
-    )
-    sdf = polygons.select(
-        "polygon_id", "exterior", "interiors", "xmin", "ymin", "xmax", "ymax"
-    ).mapInPandas(fn, schema=schema)
+    sdf = polygons.select(*_POLYGON_COLS).mapInPandas(fn, schema=_COVER_SCHEMA)
     return [tuple(r) for r in sdf.collect()]
 
 
@@ -146,8 +116,6 @@ def pip_join_points_polygons(
     res: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    keep_position: bool = False,
-    refine: str = "pandas",
 ) -> DataFrame:
     """Join point rows to the polygons that contain them.
 
@@ -158,7 +126,7 @@ def pip_join_points_polygons(
 
     The polygon side must fit in a broadcast (admin-boundary scale, ≤ ~1M
     vertices total). Returns the point columns + ``polygon_id``
-    (+ ``position`` when requested).
+    (+ ``position`` for predicate='position').
     """
     spark = points.sparkSession
     # the polygon geometry must land on the driver regardless (broadcast
@@ -181,15 +149,14 @@ def pip_join_points_polygons(
         # one job replaces the old count() + collect() pair: fetch at most
         # threshold+1 rows — fewer means the driver path with rows in hand,
         # more means the distributed path (the fetched rows are discarded)
-        fetched = polygons.select(
-            "polygon_id", "exterior", "interiors", "xmin", "ymin", "xmax", "ymax"
-        ).take(driver_cover_threshold + 1)
+        fetched = polygons.select(*_POLYGON_COLS).take(driver_cover_threshold + 1)
         if len(fetched) <= driver_cover_threshold:
             poly_rows = fetched
     if poly_rows is not None:
         if res is None:
             res = choose_res(poly_rows)
-        cover_rows = _driver_cover_rows(poly_rows, res)
+        cover = _cover_frame(poly_rows, res)
+        cover_rows = list(zip(*(cover[c].tolist() for c in cover.columns)))
     else:
         if res is None:
             res = choose_res(
@@ -199,33 +166,7 @@ def pip_join_points_polygons(
         poly_rows = polygons.select(
             "polygon_id", "exterior", "interiors"
         ).toLocalIterator(prefetchPartitions=True)
-    if refine == "sql":
-        # Catalyst-native refine: partial cells carry the polygon geometry
-        # through the broadcast; full cells carry NULL (no geometry needed).
-        geo_by_pid = {
-            int(r["polygon_id"]): (
-                [[c["x"], c["y"]] for c in r["exterior"]],
-                [[[c["x"], c["y"]] for c in ring] for ring in (r["interiors"] or [])],
-            )
-            for r in poly_rows
-        }
-        sql_rows = []
-        for cell, pid, full, x0, y0, x1, y1 in cover_rows:
-            ext, holes = (None, None) if full else geo_by_pid[pid]
-            sql_rows.append((cell, pid, full, x0, y0, x1, y1, ext, holes))
-        cover_df = spark.createDataFrame(
-            sql_rows,
-            schema="cell long, polygon_id long, full boolean, "
-            "xmin double, ymin double, xmax double, ymax double, "
-            "exterior array<struct<x:double,y:double>>, "
-            "interiors array<array<struct<x:double,y:double>>>",
-        )
-    else:
-        cover_df = spark.createDataFrame(
-            cover_rows,
-            schema="cell long, polygon_id long, full boolean, "
-            "xmin double, ymin double, xmax double, ymax double",
-        )
+    cover_df = spark.createDataFrame(cover_rows, schema=_COVER_SCHEMA)
 
     pts = points.withColumn("_cell", cell_encode_col(lon_col, lat_col, res))
     cand = pts.join(F.broadcast(cover_df), pts["_cell"] == cover_df["cell"], "inner")
@@ -233,74 +174,46 @@ def pip_join_points_polygons(
         bbox_contains_point("xmin", "ymin", "xmax", "ymax", lon_col, lat_col)
     )
 
+    # PySpark keeps each Broadcast in its worker-side registry, so
+    # ``bc.value`` deserializes the polygon table once per worker process
+    bc = spark.sparkContext.broadcast(
+        {int(r["polygon_id"]): _polygon_arrays(r) for r in poly_rows}
+    )
+
+    @F.pandas_udf(T.ByteType())
+    def position_udf(
+        polygon_id: pd.Series, lon: pd.Series, lat: pd.Series, full: pd.Series
+    ) -> pd.Series:
+        from geo_spark.kernels.predicates import polygon_position
+
+        table = bc.value
+        pid = polygon_id.to_numpy()
+        lo = lon.to_numpy(dtype=np.float64)
+        la = lat.to_numpy(dtype=np.float64)
+        is_full = full.to_numpy(dtype=bool)
+        out = np.ones(len(pid), dtype=np.int8)  # full cells are Inside
+        todo = ~is_full
+        if todo.any():
+            pid_t = pid[todo]
+            idx_t = np.flatnonzero(todo)
+            for p in np.unique(pid_t):
+                mask = idx_t[pid_t == p]
+                ext, holes = table[int(p)]
+                out[mask] = polygon_position(lo[mask], la[mask], ext, holes)
+        return pd.Series(out)
+
+    # full-cell shortcut: one pass — the UDF receives the `full` flag and
+    # masks out the winding kernel for interior cells (Arrow still ships
+    # the row, ~25 bytes, but no Python math runs for it). A filter/union
+    # split would re-scan the upstream source twice.
+    cand = cand.withColumn(
+        "position",
+        position_udf(
+            F.col("polygon_id"), F.col(lon_col), F.col(lat_col), F.col("full")
+        ),
+    )
+
     drop = ["_cell", "cell", "full", "xmin", "ymin", "xmax", "ymax"]
-
-    if refine == "sql":
-        # full-cell shortcut stays JVM-side: NULL geometry means "interior"
-        from geo_spark.functions import polygon_position_sql
-
-        cand = cand.withColumn(
-            "position",
-            F.when(F.col("full"), F.lit(1).cast("byte")).otherwise(
-                polygon_position_sql(
-                    F.col(lon_col), F.col(lat_col), "exterior", "interiors"
-                )
-            ),
-        )
-        drop += ["exterior", "interiors"]
-    elif refine == "pandas":
-        geoms = {
-            int(r["polygon_id"]): (
-                np.asarray([(c["x"], c["y"]) for c in r["exterior"]], dtype=np.float64),
-                [
-                    np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-                    for ring in (r["interiors"] or [])
-                ],
-            )
-            for r in poly_rows
-        }
-        bc = spark.sparkContext.broadcast(geoms)
-        bc_key = f"pip:{id(bc)}:{len(geoms)}"
-
-        @F.pandas_udf(T.ByteType())
-        def position_udf(
-            polygon_id: pd.Series, lon: pd.Series, lat: pd.Series, full: pd.Series
-        ) -> pd.Series:
-            # deserialize the broadcast polygon table once per executor process
-            table = _BC_CACHE.get(bc_key)
-            if table is None:
-                table = bc.value
-                _BC_CACHE[bc_key] = table
-            from geo_spark.kernels.predicates import polygon_position
-
-            pid = polygon_id.to_numpy()
-            lo = lon.to_numpy(dtype=np.float64)
-            la = lat.to_numpy(dtype=np.float64)
-            is_full = full.to_numpy(dtype=bool)
-            out = np.ones(len(pid), dtype=np.int8)  # full cells are Inside
-            todo = ~is_full
-            if todo.any():
-                pid_t = pid[todo]
-                idx_t = np.flatnonzero(todo)
-                for p in np.unique(pid_t):
-                    mask = idx_t[pid_t == p]
-                    ext, holes = table[int(p)]
-                    out[mask] = polygon_position(lo[mask], la[mask], ext, holes)
-            return pd.Series(out)
-
-        # full-cell shortcut: one pass — the UDF receives the `full` flag and
-        # masks out the winding kernel for interior cells (Arrow still ships
-        # the row, ~25 bytes, but no Python math runs for it). A filter/union
-        # split would re-scan the upstream source twice.
-        cand = cand.withColumn(
-            "position",
-            position_udf(
-                F.col("polygon_id"), F.col(lon_col), F.col(lat_col), F.col("full")
-            ),
-        )
-    else:
-        raise ValueError(f"unknown refine: {refine}")
-
     if predicate == "contains":
         cand = cand.filter(F.col("position") == 1)
     elif predicate in ("covers", "intersects"):
@@ -308,6 +221,6 @@ def pip_join_points_polygons(
     elif predicate != "position":
         raise ValueError(f"unknown predicate: {predicate}")
 
-    if not keep_position and predicate != "position":
+    if predicate != "position":
         drop.append("position")
     return cand.drop(*drop)

@@ -140,7 +140,8 @@ def _peel_dangles(seg: DataFrame, max_rounds: int = 64) -> DataFrame:
             converged = True
             break
         n = n2
-    if not converged:
+    # a last permitted round that peels everything away has converged too
+    if not converged and n:
         # a dangle chain longer than ~2*max_rounds links would leave
         # residual degree-1 edges whose twin-bounce successors inject
         # zero-area spikes into face rings (diverging from JTS Polygonizer

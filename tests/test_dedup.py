@@ -194,3 +194,23 @@ def test_dedup_tiered_duplicate_heavy_stays_linear(spark):
     dups = [r for r in rows if r["tier"] == "exact"]
     assert len(dups) == n - 50 - 1
     assert all(r["dup_of"] == 50 for r in dups)  # min id of the dup class
+
+
+def test_shuffle_regex_finds_node_in_left_subtree():
+    # optimized plan of (range(10) → groupBy.count → filter) ∪ range(5): the
+    # only Aggregate is a grandchild of the Union's left branch
+    from geo_spark.operators.dedup import _SHUFFLE_NODE_RE
+
+    plan = (
+        "Union false, false\n"
+        ":- Project [k#1L, count#2L AS n#5L]\n"
+        ":  +- Filter (count#2L > 1)\n"
+        ":     +- Aggregate [k#1L], [k#1L, count(1) AS count#2L]\n"
+        ":        +- Project [(id#0L % 3) AS k#1L]\n"
+        ":           +- Range (0, 10, step=1, splits=Some(1))\n"
+        "+- Project [id#6L AS k#7L, 1 AS n#8L]\n"
+        "   +- Range (0, 5, step=1, splits=Some(1))\n"
+    )
+    assert _SHUFFLE_NODE_RE.search(plan).group(1) == "Aggregate"
+    no_shuffle = "\n".join(l for l in plan.splitlines() if "Aggregate" not in l)
+    assert _SHUFFLE_NODE_RE.search(no_shuffle) is None

@@ -122,22 +122,7 @@ def test_pip_join_intersects_includes_boundary(spark):
     assert covers == {"corner", "edge", "inside"}
 
 
-def test_sql_refine_matches_pandas_refine(spark, docs, polys):
-    pts = extract_points(docs)
-    a = (
-        pip_join_points_polygons(pts, polys, predicate="contains", refine="pandas")
-        .groupBy("polygon_id").count().collect()
-    )
-    b = (
-        pip_join_points_polygons(pts, polys, predicate="contains", refine="sql")
-        .groupBy("polygon_id").count().collect()
-    )
-    assert {r["polygon_id"]: r["count"] for r in a} == {
-        r["polygon_id"]: r["count"] for r in b
-    }
-
-
-def test_sql_refine_boundary_and_holes(spark):
+def test_position_boundary_and_holes(spark):
     polys = synth_admin_polygons(spark, grid_deg=10.0)
     pts = spark.createDataFrame(
         [
@@ -152,9 +137,7 @@ def test_sql_refine_boundary_and_holes(spark):
     one = polys.filter("polygon_id = 0")
     got = {
         r["url"]: r["position"]
-        for r in pip_join_points_polygons(
-            pts, one, predicate="position", refine="sql"
-        ).collect()
+        for r in pip_join_points_polygons(pts, one, predicate="position").collect()
     }
     assert got["in_ring"] == 1
     assert got["in_hole"] == -1
@@ -162,11 +145,8 @@ def test_sql_refine_boundary_and_holes(spark):
     assert got["on_outer_edge"] == 0
 
 
-def test_cover_polygons_batch_matches_per_polygon():
-    # the driver-side cover build now runs the batched vectorized
-    # cover_polygons; it must classify exactly like the per-polygon kernel
-    from geo_spark.index.cells import cover_polygon, cover_polygons
-
+def _random_polygons():
+    """60 random star-convex polygons, the larger ones with one hole."""
     rng = np.random.RandomState(7)
     polys = []
     for _ in range(60):
@@ -182,6 +162,15 @@ def test_cover_polygons_batch_matches_per_polygon():
             holes = [np.vstack([h[::-1], h[-1:][::-1]])[: len(h) + 1]]
             holes = [np.vstack([holes[0], holes[0][:1]])]
         polys.append((ext, holes))
+    return polys
+
+
+def test_cover_polygons_batch_matches_per_polygon():
+    # both cover routes run the batched vectorized cover_polygons; it must
+    # classify exactly like the per-polygon kernel
+    from geo_spark.index.cells import cover_polygon, cover_polygons
+
+    polys = _random_polygons()
     for res in (5, 8):
         cells, pidx, full = cover_polygons(polys, res)
         for i, (e, hs) in enumerate(polys):
@@ -190,3 +179,32 @@ def test_cover_polygons_batch_matches_per_polygon():
             o1, o2 = np.argsort(cells[m]), np.argsort(cc)
             assert np.array_equal(cells[m][o1], cc[o2]), f"cells differ poly {i} res {res}"
             assert np.array_equal(full[m][o1], ff[o2]), f"full flags differ poly {i} res {res}"
+
+
+def test_distributed_cover_route_matches_driver_route(spark, polys):
+    # the mapInPandas cover route runs only above the driver-route polygon
+    # threshold, which the test data never reaches: call it directly
+    from geo_spark.operators.pip_join import _cover_frame, _distributed_cover_rows
+
+    def ring(a):
+        return [(float(x), float(y)) for x, y in a]
+
+    cols = ("polygon_id", "exterior", "interiors", "xmin", "ymin", "xmax", "ymax")
+    extra = [
+        (10_000 + i, ring(ext), [ring(h) for h in holes],
+         float(ext[:, 0].min()), float(ext[:, 1].min()),
+         float(ext[:, 0].max()), float(ext[:, 1].max()))
+        for i, (ext, holes) in enumerate(_random_polygons())
+    ]
+    df = polys.select(*cols).unionByName(
+        spark.createDataFrame(extra, polys.select(*cols).schema)
+    ).repartition(3)
+    rows = df.collect()
+    assert len(rows) == 648 + 60
+    for res in (5, 8):
+        driver = _cover_frame(rows, res)
+        want = sorted(zip(*(driver[c].tolist() for c in driver.columns)))
+        got = sorted(_distributed_cover_rows(df, res))
+        assert len(got) > len(rows)
+        assert got == want
+    assert driver["full"].any() and not driver["full"].all()

@@ -45,15 +45,6 @@ def test_pip_join_is_broadcast(spark, docs):
     assert bbox_idx > py_idx  # deeper in the tree = printed later
 
 
-def test_pip_join_sql_refine_has_no_python(spark, docs):
-    pts = extract_points(docs)
-    polys = synth_admin_polygons(spark, grid_deg=10.0)
-    joined = pip_join_points_polygons(pts, polys, predicate="contains", refine="sql")
-    plan = _plan(joined)
-    assert "Python" not in plan and "Arrow" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_knn_primary_path_is_equi_join(spark, docs):
     pts = extract_points(docs).withColumn("id", F.xxhash64("url"))
     q = pts.select(F.col("id").alias("qid"), "lon", "lat").limit(50)

@@ -147,3 +147,17 @@ def test_empty_and_all_dangles(spark):
         "x1 double, y1 double, x2 double, y2 double",
     )
     assert polygonize_distributed(df).count() == 0
+
+
+def test_peel_dangles_last_round_clears_chain(spark):
+    # a 4-segment open chain loses both end segments per round: two rounds
+    # peel it to nothing, which is convergence, not a failure
+    from geo_spark.operators.polygonize_dist import _peel_dangles
+
+    seg = spark.createDataFrame(
+        [(float(i), 0.0, float(i + 1), 0.0) for i in range(4)],
+        "ax double, ay double, bx double, by double",
+    )
+    assert _peel_dangles(seg, max_rounds=2).count() == 0
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _peel_dangles(seg, max_rounds=1)
